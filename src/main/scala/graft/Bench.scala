@@ -34,72 +34,8 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default = the machine's cores, NOT a fixed small number: the
-    // round-1 default of 4 silently measured five round-12 windows on
-    // 4 of 32 cores against a 32-thread DuckDB oracle (the driver
-    // passes 32 explicitly, so this default only guards manual runs).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Round-11 constant attack (measured, graft.Prof conf_sweep, sf0.1,
-      // interleaved cells, min-of-3): the suite is driver-latency-bound,
-      // not data-bound, at bench scale — 34 sampled queries ran 41.1 s
-      // under the old (AQE on, partitions=cpus) config vs 31.0 s at
-      // (AQE off, partitions=8): fewer reduce tasks per stage and no
-      // per-stage AQE replan/job split. Scan parallelism is unaffected
-      // (file splits), map-side combine is unaffected, and
-      // singlePartitionFinals already bounds the finals. This is a
-      // BENCH-HARNESS constant, not production guidance: on a real
-      // cluster at 100 TB you run AQE on with partitions sized to the
-      // data (the operators' plans don't change shape either way). Env
-      // overrides keep the A/B reproducible.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "8"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // Same constant-attack family (graft.Prof conf_ab, 12-query
-      // interleaved A/B): constraint propagation is an O(tree²)
-      // optimizer pass whose inferred IsNotNull pushdowns matter on
-      // real scans, not on a warm 12k-row bench corpus — off saved 6%
-      // total with zero per-query regressions (q04 −35%). Correctness
-      // is unaffected by construction (it only ADDS derived filters);
-      // Verify keeps Spark defaults.
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINTS", "false"))
-      // local[N] shuffles never cross a network and mostly hit the page
-      // cache, so block compression is pure CPU cost — A/B knob (core
-      // conf: must be set before the context starts, hence env-only)
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Static conf, must precede session creation: the default generated-
-      // class cache holds 100 entries; 45+ queries × several codegen stages
-      // × repeated runs thrash it, so re-runs pay full Janino compilation
-      // (measured ~3.5 s on the window queries) instead of a cache hit.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // The 300 s default killed 11 refinement runs in one contended
-      // session (cold pass 1030 s): a broadcast that takes >300 s wall
-      // under load throws and looked like a query failure. The bench's
-      // outer budget already bounds total time; don't let an inner
-      // timeout fabricate failures.
-      .config("spark.sql.broadcastTimeout", "3600")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
-    // JVM warmup so the first measured query doesn't absorb codegen
-    // compiler, scheduler, and parquet-reader startup cost (q01 runs
-    // first alphabetically and was paying ~2s of one-time init).
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = harnessSession()
     graft.sources.Tables.names.foreach { t =>
       try graft.sources.Tables.load(spark, sfDir, t).limit(64).collect()
       catch { case _: Throwable => () }
@@ -464,5 +400,77 @@ object Bench {
     println(line())
     write(outPath)
     spark.stop()
+  }
+
+  /** The harness session, shared with [[Prof]] so its measurements
+    * transfer: sets `singlePartitionFinals` for this JVM, builds the
+    * session with the bench constants below, and warms the JVM. */
+  private[graft] def harnessSession(): SparkSession = {
+    QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
+    // Default = the machine's cores, NOT a fixed small number: the
+    // round-1 default of 4 silently measured five round-12 windows on
+    // 4 of 32 cores against a 32-thread DuckDB oracle (scheduled bench
+    // runs pass 32 explicitly, so this default only guards manual runs).
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      // Round-11 constant attack (measured, graft.Prof conf_sweep, sf0.1,
+      // interleaved cells, min-of-3): the suite is driver-latency-bound,
+      // not data-bound, at bench scale — 34 sampled queries ran 41.1 s
+      // under the old (AQE on, partitions=cpus) config vs 31.0 s at
+      // (AQE off, partitions=8): fewer reduce tasks per stage and no
+      // per-stage AQE replan/job split. Scan parallelism is unaffected
+      // (file splits), map-side combine is unaffected, and
+      // singlePartitionFinals already bounds the finals. This is a
+      // BENCH-HARNESS constant, not production guidance: on a real
+      // cluster at 100 TB you run AQE on with partitions sized to the
+      // data (the operators' plans don't change shape either way). Env
+      // overrides keep the A/B reproducible.
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "8"))
+      .config("spark.sql.adaptive.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+      // Same constant-attack family (graft.Prof conf_ab, 12-query
+      // interleaved A/B): constraint propagation is an O(tree²)
+      // optimizer pass whose inferred IsNotNull pushdowns matter on
+      // real scans, not on a warm 12k-row bench corpus — off saved 6%
+      // total with zero per-query regressions (q04 −35%). Correctness
+      // is unaffected by construction (it only ADDS derived filters);
+      // Verify keeps Spark defaults.
+      .config("spark.sql.constraintPropagation.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINTS", "false"))
+      // local[N] shuffles never cross a network and mostly hit the page
+      // cache, so block compression is pure CPU cost — A/B knob (core
+      // conf: must be set before the context starts, hence env-only)
+      .config("spark.shuffle.compress",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
+      .config("spark.shuffle.spill.compress",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
+      .config("spark.broadcast.compress",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      // Static conf, must precede session creation: the default generated-
+      // class cache holds 100 entries; 45+ queries × several codegen stages
+      // × repeated runs thrash it, so re-runs pay full Janino compilation
+      // (measured ~3.5 s on the window queries) instead of a cache hit.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      // The 300 s default killed 11 refinement runs in one contended
+      // session (cold pass 1030 s): a broadcast that takes >300 s wall
+      // under load throws and looked like a query failure. The bench's
+      // outer budget already bounds total time; don't let an inner
+      // timeout fabricate failures.
+      .config("spark.sql.broadcastTimeout", "3600")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.sources.Tables.configure(spark)
+    // JVM warmup so the first measured query doesn't absorb codegen
+    // compiler, scheduler, and parquet-reader startup cost (q01 runs
+    // first alphabetically and was paying ~2s of one-time init).
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    spark
   }
 }

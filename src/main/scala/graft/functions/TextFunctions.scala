@@ -202,7 +202,4 @@ object TextFunctions {
     ColumnBridge.column(
       graft.expressions.CountInSet(ColumnBridge.expression(arr), items))
   }
-
-  def langIdScore(text: Column, lang: String): Column =
-    countInSet(tokens(text), langMarkers(lang))
 }

@@ -51,10 +51,18 @@ object Timestamps {
     * microseconds — verified empirically — which is precisely the
     * reference's `truncate_microseconds` behavior, so no regex
     * normalization is needed on this path at all ([[truncateMicroseconds]]
-    * remains the standalone F1 string transform). */
-  def parseTimestamp(c: Column): Column =
-    ColumnBridge.column(
+    * remains the standalone F1 string transform).
+    *
+    * The cast also accepts years Python's `datetime` cannot hold
+    * (MINYEAR 1, MAXYEAR 9999): `0000`, `+10000-01-01`, `12345-01-01`.
+    * The reference logs those and returns None, so a parsed year
+    * outside 1–9999 is null here too, and [[parseWithNowFallback]]
+    * stamps `now` exactly where the reference does. */
+  def parseTimestamp(c: Column): Column = {
+    val ts = ColumnBridge.column(
       Cast(ColumnBridge.expression(c), TimestampType, None, EvalMode.TRY))
+    when(year(ts).between(1, 9999), ts)
+  }
 
   /** F4 policy: parse, but substitute `now` for non-empty unparseable
     * values (rqtradein_etl.py:319-322). Off the hot path for tests (clean

@@ -106,7 +106,7 @@ object Merge {
     * overwrite replaces exactly the written partitions. Returns the
     * partition values merged.
     *
-    * Moved keys (`probeMovedKeys`, default on): a matched key whose
+    * Moved keys: a matched key whose
     * `partitionCol` value CHANGED in this batch (the reference's
     * business-date correction) has its live row in a partition the
     * source does not mention; a slice-only merge would insert a
@@ -117,9 +117,7 @@ object Merge {
     * pushed down, a tiny fraction of target bytes at 100 TB — and any
     * hit partitions join the rewrite set. A partition emptied by its
     * only row moving away is deleted explicitly (dynamic overwrite
-    * never clears a partition it writes no rows to). Pass
-    * `probeMovedKeys = false` only when the partition key is immutable
-    * per business key, which reduces to the pure pruned-slice plan.
+    * never clears a partition it writes no rows to).
     *
     * Cross-batch stable-schema CONTRACT: every read of the target pins
     * the FULL source schema (`spark.read.schema(source.schema)`) — the
@@ -139,20 +137,14 @@ object Merge {
       key: String,
       partitionCol: String,
       dataCols: Seq[String],
-      audit: Option[(String, String, Column)] = None,
-      probeMovedKeys: Boolean = true,
-      pinSource: Boolean = true): Seq[String] = {
+      audit: Option[(String, String, Column)] = None): Seq[String] = {
     // This method runs SEVERAL actions over `source` (partition
-    // discovery, the moved-key probe, the merge write). With pinning the
-    // source materializes once into cache; without it each action
-    // re-executes the source lineage, but COLUMN-PRUNED (discovery needs
-    // only the partition column, the probe only the key), so a cheap
-    // lineage can be cheaper to re-run pruned than to cache wide.
-    // Callers with an expensive un-pruneable source keep the default.
-    val src = if (pinSource) source.persist() else source
+    // discovery, the moved-key probe, the merge write); pinning it
+    // materializes the source lineage once instead of once per action.
+    val src = source.persist()
     try upsertPartitionedPinned(spark, targetPath, src, key, partitionCol,
-      dataCols, audit, probeMovedKeys)
-    finally if (pinSource) src.unpersist(blocking = false)
+      dataCols, audit)
+    finally src.unpersist(blocking = false)
   }
 
   private def upsertPartitionedPinned(
@@ -162,8 +154,7 @@ object Merge {
       key: String,
       partitionCol: String,
       dataCols: Seq[String],
-      audit: Option[(String, String, Column)],
-      probeMovedKeys: Boolean): Seq[String] = {
+      audit: Option[(String, String, Column)]): Seq[String] = {
     val parts0 = source.select(col(partitionCol).cast("string"))
       .distinct().collect().map(_.getString(0)).toSeq
     if (parts0.isEmpty) return Seq.empty
@@ -212,7 +203,7 @@ object Merge {
     // raw-string fast-path compare below is exact.
     def targetRead = spark.read.schema(source.schema).parquet(targetPath)
     val untouchedOnDisk: Seq[String] =
-      if (!exists || !probeMovedKeys) Seq.empty
+      if (!exists) Seq.empty
       else {
         val prefix = s"$partitionCol="
         val parts0Set = parts0.toSet
@@ -223,7 +214,7 @@ object Merge {
           .filterNot(parts0Set)
       }
     val movedParts: Seq[String] =
-      if (!exists || !probeMovedKeys || untouchedOnDisk.isEmpty) Seq.empty
+      if (untouchedOnDisk.isEmpty) Seq.empty
       else {
         targetRead
           .filter(!col(partitionCol).cast("string").isin(parts0: _*))

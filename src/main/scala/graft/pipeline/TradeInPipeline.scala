@@ -27,10 +27,10 @@ import TradeInSchema._
   * Scale posture: the daily source batch is small relative to the target
   * (one day vs. all history) — the merge's full-outer join broadcasts the
   * source side under AQE. The staging table never exceeds ~2 days of data
-  * by construction (retention). The target snapshot rewrite is the one
-  * full-table cost; on a date-partitioned target, writers should swap
-  * only partitions present in the source (documented on
-  * [[graft.operators.Merge.writeSnapshot]]).
+  * by construction (retention). The target is `TradeInDay`-partitioned,
+  * and `run` rewrites only the partitions present in the batch
+  * ([[TradeInPipeline.mergeIntoTargetPartitioned]]), so no stage pays a
+  * full-table rewrite.
   */
 object TradeInPipeline {
 
@@ -112,7 +112,7 @@ object TradeInPipeline {
     * ONLY the partitions the batch touches — the reference's daily batch
     * spans 1–2 business days, so the daily run reads and rewrites 1–2
     * partitions of years of history instead of snapshotting the world
-    * (the [[mergeIntoTarget]] + writeSnapshot fallback). Date
+    * as [[mergeIntoTarget]] + writeSnapshot would. Date
     * corrections that move an invoice across days are handled by
     * [[graft.operators.Merge.upsertPartitioned]]'s moved-key probe.
     * Returns the partition values rewritten.
@@ -201,11 +201,6 @@ final class TradeInPipeline(
     names: TradeInPipeline.Names = TradeInPipeline.Names(),
     registerCatalog: Boolean = true,
     now: () => Column = () => current_timestamp(),
-    // Partition-scoped target by default (SURVEY §4.3): the daily merge
-    // rewrites only the TradeInDay partitions present in the batch.
-    // `false` falls back to the flat full-snapshot layout — only for
-    // small targets where a whole-table rewrite is acceptable.
-    partitionedTarget: Boolean = true,
     // Run-level deadline — the reference caps a whole run at 90 minutes
     // (host.json:3, functionTimeout 01:30:00). Checked at every stage
     // boundary (the driver-side analogue of the platform kill: a Spark
@@ -225,18 +220,17 @@ final class TradeInPipeline(
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Target rows in `targetSchema` shape regardless of layout: the
-    * partitioned layout re-derives `TradeInDay` from directories, which
-    * this drops (an explicit-schema read would reject the extra column). */
+  /** Target rows in `targetSchema` shape: the partitioned layout
+    * re-derives `TradeInDay` from directories, which this drops (an
+    * explicit-schema read would reject the extra column). */
   private def readTarget(spark: SparkSession): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
-    else if (partitionedTarget)
+    else
       spark.read.parquet(targetPath)
         .select(targetSchema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-    else spark.read.schema(targetSchema).parquet(targetPath)
   }
 
   /** One daily run: fetch → stage/append → merge → counts → retention.
@@ -290,17 +284,12 @@ final class TradeInPipeline(
       metrics("staged_rows") = obs.get("staged_rows").asInstanceOf[Long]
     }
 
-    // 5. merge into target — partition-scoped by default: only the
+    // 5. merge into target, partition-scoped (SURVEY §4.3): only the
     // TradeInDay partitions present in this batch are read and
     // rewritten (plus any moved-key partitions the probe finds).
     val staging = spark.read.schema(stagingSchema).parquet(stagingPath)
     timed("merge") {
-      if (partitionedTarget)
-        mergeIntoTargetPartitioned(spark, targetPath, staging, nowCol)
-      else
-        Merge.writeSnapshot(
-          mergeIntoTarget(readOrEmpty(spark, targetPath, targetSchema), staging, nowCol),
-          targetPath)
+      mergeIntoTargetPartitioned(spark, targetPath, staging, nowCol)
     }
 
     // 6. counts + staging retention (`retained_rows` observed in-pass).

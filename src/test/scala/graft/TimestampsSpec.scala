@@ -64,6 +64,19 @@ class TimestampsSpec extends AnyFunSuite {
     assert(got.forall(identity))
   }
 
+  test("F2 parse: years outside Python's datetime range 1-9999 yield null") {
+    val outOfRange = Seq("0000", "0000-06-01 10:00:00", "+10000-01-01",
+      "12345-01-01", "-0001-01-01")
+    val df = strings("s", outOfRange ++ Seq("0001-01-01", "9999-12-31 23:59:59"))
+    val parsed = df.select(Timestamps.parseTimestamp(col("s"))).collect().map(_.isNullAt(0))
+    assert(parsed.toSeq == outOfRange.map(_ => true) ++ Seq(false, false))
+    val now = lit("2024-06-01 10:00:00").cast("timestamp")
+    val fallback = strings("s", outOfRange).select(date_format(
+      Timestamps.parseWithNowFallback(col("s"), now), "yyyy-MM-dd HH:mm:ss"))
+      .collect().map(_.getString(0)).toSeq
+    assert(fallback == outOfRange.map(_ => "2024-06-01 10:00:00"))
+  }
+
   test("F4 fallback: unparseable-but-present becomes now; null/empty stay null") {
     val now = lit("2024-06-01 10:00:00").cast("timestamp")
     val df = strings("s", Seq("garbage", "", null, "2024-01-02 03:04:05"))
